@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.text._
+import graft.util.Lineage
 
 /** Deduplication operators for document corpora. All are expressed as
   * declarative plans (groupBy / explode / join) so Catalyst parallelizes
@@ -162,7 +163,7 @@ object Dedup {
       .withColumn("w", struct(col("doc_id"), col("wi")))
     // same cands-sever + candidate-pruned exact verify as
     // [[minhashLshPairsOn]], with the two halves fed separately
-    val cands = graft.util.Lineage.severTracked(
+    val cands = Lineage.sever(
       bandPairs(sigs, bands, numHashes / bands, salt = 1))
     val pairs = verifyByJaccard(cands, shs, threshold)
       .filter(col("doc_a.doc_id") =!= col("doc_b.doc_id"))
@@ -250,10 +251,8 @@ object Dedup {
       DistinctShingleHashes.distinct_shingle_hashes(col(textCol), n).as("sh"))
     // both indexes feed banding AND verification — persist (the history
     // one stands in for the at-rest index a real pipeline would read)
-    val histIdx = graft.util.IntermediateCaches.track(index(history)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val batchIdx = graft.util.IntermediateCaches.track(index(batch)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val histIdx = Lineage.reuse(index(history))
+    val batchIdx = Lineage.reuse(index(batch))
     def banded(idx: DataFrame): DataFrame = idx.select(col("doc"), posexplode(
       org.apache.spark.sql.graft.BandKeys
         .band_keys(col("sig"), bands, rows)).as(Seq("band", "bkey")))
@@ -322,79 +321,41 @@ object Dedup {
     * The default cap never triggers at gate scale (sf0.01: 500 docs), so
     * oracle semantics are exact there.
     *
-    * `persistIndex`: off by default — the shingle expression is a
-    * codegen'd one-pass loop, and recomputing it is MEASURABLY cheaper
-    * than materializing the exploded index to MEMORY_AND_DISK (sf0.1,
-    * local[32]: cold 2.2 s without persist vs 5.1 s with). Pass true
-    * only when a long-lived session genuinely reuses the index ≥3×. */
-  /** Corpus-size crossover for severing the shingle index (bytes of
-    * the optimizer's input-size estimate). The index feeds BOTH
-    * self-join sides, the df-cap window and the per-doc set sizes —
-    * four references whose pre-AQE plans each duplicate the corpus
-    * scan + tokenize + explode subtree. ABOVE the threshold one
-    * corpus pass builds the index and a hard sever
-    * ([[graft.util.Lineage.sever]]) materializes it for every
-    * consumer — paired A/B at sf1 (170 MB): d_ngram_jaccard
-    * 25.9 → 13.9 s, d_winnow_recall 38.8 → 15.1 s. BELOW it the
-    * block-manager materialization costs more than the recompute
-    * (AQE's runtime exchange reuse already deduplicates the identical
-    * subtrees): sf0.1 (0.6 MB parquet) measured 2.46 → 3.23 s severed.
-    * The default sits between the two measured input sizes (0.6 MB
-    * loses, 8 MB wins — sizes are the optimizer's estimate, i.e.
-    * parquet FILE bytes); at 100 TB the severed path is the only sane
-    * one (with `spark.graft.sever.reliable` for executor-loss
-    * safety). */
-  val SeverIndexBytesKey = "spark.graft.jaccard.severIndexBytes"
-  private val SeverIndexBytesDefault = 4L * 1024 * 1024
-
-  private def severIndexBytes(df: DataFrame): Long =
-    df.sparkSession.conf.getOption(SeverIndexBytesKey)
-      .map(_.trim.toLong).getOrElse(SeverIndexBytesDefault)
-
-  /** Size-adaptive hard sever: above the [[SeverIndexBytesKey]]
-    * crossover (measured on the shingle-index family) materialize
-    * `df`; below it, return it untouched and let AQE's runtime
-    * exchange reuse deduplicate repeated references. `sizeOf` is the
-    * frame whose INPUT size drives the decision (the corpus scan). */
-  private[graft] def severIfBig(sizeOf: DataFrame)(df: DataFrame): DataFrame =
-    if (sizeOf.queryExecution.optimizedPlan.stats.sizeInBytes >=
-        BigInt(severIndexBytes(sizeOf)))
-      graft.util.Lineage.severTracked(df)
-    else df
-
+    * Above the [[graft.util.Lineage.SeverBytes]] input crossover the
+    * shingle index, its per-doc counts and the df-capped index are
+    * severed: the index feeds both self-join sides, the df-cap window
+    * and the per-doc set sizes — four references whose pre-AQE plans
+    * each duplicate the corpus scan + tokenize + explode subtree — so
+    * one corpus pass builds it for every consumer. */
   def ngramJaccardPairs(docs: DataFrame, n: Int, threshold: Double,
       idCol: String = "doc_id", textCol: String = "text",
-      maxShingleDf: Long = 10000L, persistIndex: Boolean = false): DataFrame = {
-    // size-adaptive severing — see [[SeverIndexBytesKey]]
-    val bigCorpus = docs.queryExecution.optimizedPlan.stats.sizeInBytes >=
-      BigInt(severIndexBytes(docs))
-    def maybeSever(df: DataFrame): DataFrame =
-      if (bigCorpus) graft.util.Lineage.severTracked(df) else df
-    val idx = maybeSever(shingleIndex(docs, idCol, textCol, n))
-    // per-doc set sizes: on the severed path, from the index itself —
-    // the index IS the per-doc distinct-shingle set (one row per
-    // (doc, s)), so the group-count equals
+      maxShingleDf: Long = 10000L): DataFrame =
+    ngramJaccardPairs(docs, n, threshold, idCol, textCol, maxShingleDf,
+      Lineage.gate(docs))
+
+  /** [[ngramJaccardPairs]] under an already decided sever mode. */
+  private[graft] def ngramJaccardPairs(docs: DataFrame, n: Int,
+      threshold: Double, idCol: String, textCol: String, maxShingleDf: Long,
+      sever: Lineage.Mode): DataFrame = {
+    val idx = Lineage.sever(shingleIndex(docs, idCol, textCol, n), sever)
+    // per-doc set sizes from the index itself, on either sever mode:
+    // one row per (doc, s) and input row, so the group count equals
     // size(distinct_shingles(text, n)) for every doc with at least one
-    // shingle, and docs with none cannot appear in `inter` (no index
-    // rows), so the inner joins below see identical inputs. UNCAPPED by
-    // construction (counted before the df-cap). On the small-corpus
-    // path, map-only from the docs (no groupBy over the larger index).
-    val counts =
-      if (bigCorpus) graft.util.Lineage.severTracked(
-        idx.groupBy(col("doc")).agg(count(lit(1)).as("n_sh")))
-      else spread(docs).select(col(idCol).as("doc"),
-        size(org.apache.spark.sql.graft.DistinctShingles
-          .distinct_shingles(col(textCol), n)).cast("long").as("n_sh"))
+    // shingle (docs with none cannot appear in `inter`), and a repeated
+    // id counts the union of its rows — the same multiset the self-join
+    // sees. UNCAPPED by construction (counted before the df-cap).
+    val counts = Lineage.sever(
+      idx.groupBy(col("doc")).agg(count(lit(1)).as("n_sh")), sever)
     // df cap as a window count over the SAME hash-partitioning-by-s the
-    // self-join needs anyway; on the severed path computed ONCE and
-    // itself severed (both join sides read it)
+    // self-join needs anyway; severed, it is computed once for both
+    // join sides
     val kept =
       if (maxShingleDf == Long.MaxValue) idx
-      else maybeSever(idx
+      else Lineage.sever(idx
         .withColumn("s_df", count(lit(1)).over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("s"))))
         .filter(col("s_df") <= maxShingleDf)
-        .drop("s_df"))
+        .drop("s_df"), sever)
     val a = kept.select(col("doc").as("doc_a"), col("s"))
     val b = kept.select(col("doc").as("doc_b"), col("s"))
     val inter = a.join(b, "s")
@@ -482,8 +443,8 @@ object Dedup {
     // crossover, sever it so the corpus-scale shingle-set expression
     // runs once (round-20, same discipline as the jaccard index —
     // pruned is candidate-bounded, tiny next to the corpus)
-    val pruned = severIfBig(shSets)(
-      shSets.join(candIds, Seq("doc"), "left_semi"))
+    val pruned = Lineage.sever(
+      shSets.join(candIds, Seq("doc"), "left_semi"), Lineage.gate(shSets))
     cands
       .join(pruned.select(col("doc").as("doc_a"), col("sh").as("sh_a")), "doc_a")
       .join(pruned.select(col("doc").as("doc_b"), col("sh").as("sh_b")), "doc_b")
@@ -516,7 +477,7 @@ object Dedup {
     // side) and with plain persist each of those stages' task binaries
     // still serializes the full signature+banding expression tree —
     // the task-binary churn [[graft.util.Lineage.sever]] documents
-    val cands = graft.util.Lineage.severTracked(
+    val cands = Lineage.sever(
       bandPairs(pre.select(col(idCol).as("doc"), col(sigCol).as("sig")),
         bands, numHashes / bands, salt))
     verifyByJaccard(cands,
@@ -533,32 +494,27 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, n: Int, threshold: Double,
       numHashes: Int = 64, bands: Int = 16,
       idCol: String = "doc_id", textCol: String = "text",
-      persistIndex: Boolean = false, salt: Int = 1): DataFrame = {
+      salt: Int = 1): DataFrame = {
     // the candidate set is referenced three times below (two semi-join
-    // probes + the verify left side); hard-severed (eager localCheckpoint,
+    // probes + the verify left side); hard-severed (eager checkpoint,
     // [[graft.util.Lineage.sever]]) — it is O(pairs), tiny next to the
     // corpus, the signature+banding pass runs exactly once, and the
     // downstream task binaries carry a checkpoint block reference instead
     // of the full signature expression tree. Lifetime: tracked in
     // [[graft.util.IntermediateCaches]] — callers release eagerly via
     // IntermediateCaches.releaseAll() after materializing.
-    val cands = graft.util.Lineage.severTracked(
+    val cands = Lineage.sever(
       minhashLshCandidates(docs, n, numHashes, bands, idCol, textCol, salt))
     // verify ONLY the candidate pairs: bring both docs' distinct-shingle
     // sets to the pair and intersect as arrays — O(|cands|·|sh|), never
     // the full inverted-index pair blowup; sets come from the codegen'd
-    // one-pass expression (same values as array_distinct∘shingles).
-    // persistIndex defaults off: recomputing the codegen'd one-pass
-    // shingle sets is cheaper than a MEMORY_AND_DISK materialization
-    // (sf0.1 measured 0.74 s vs 1.21 s cold).
-    val shSets0 = spread(docs).select(col(idCol).as("doc"),
+    // one-pass expression (same values as array_distinct∘shingles),
+    // recomputed rather than persisted: cheaper than a MEMORY_AND_DISK
+    // materialization (sf0.1 measured 0.74 s vs 1.21 s cold).
+    val shSets = spread(docs).select(col(idCol).as("doc"),
       org.apache.spark.sql.graft.DistinctShingles
         .distinct_shingles(col(textCol), n).as("sh"))
-    val shSets1 = if (persistIndex)
-      graft.util.IntermediateCaches.track(
-        shSets0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    else shSets0
-    verifyByJaccard(cands, shSets1, threshold)
+    verifyByJaccard(cands, shSets, threshold)
   }
 
   /** Near-dup pairs by shared winnowing fingerprints — the MOSS
@@ -628,17 +584,6 @@ object Dedup {
       s"unknown connectedComponents algorithm '$other' (minlabel|star)")
   }
 
-  private val CacheLvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
-  /** Lineage cut for iterative loops — see [[graft.util.Lineage]]
-    * (promoted to util so the BPE merge learner shares it). Each CC
-    * round references the previous round's frame more than once, so
-    * carried lineage multiplies the logical plan per round and plan
-    * analysis (not data!) blows up in the iteration count even when
-    * persist makes execution incremental. */
-  private def cutLineage(df: DataFrame): (DataFrame, Boolean => Unit) =
-    graft.util.Lineage.cut(df)
-
   /** Decimal-exact aggregate of a Long column — the per-round
     * convergence scalar. coalesce: SUM over an empty frame is null; an
     * empty pair graph must read as converged, not NPE. */
@@ -651,43 +596,40 @@ object Dedup {
       maxIters: Int): DataFrame = {
     // both edge directions from ONE evaluation of the (possibly
     // expensive) pairs plan — a union of two selects would run it twice
-    val edges = pairs.select(explode(array(
+    val edges = Lineage.reuse(pairs.select(explode(array(
         struct(col(aCol).as("src"), col(bCol).as("dst")),
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist(CacheLvl)
+      .select(col("e.src").as("src"), col("e.dst").as("dst")))
     // each round references the previous labels frame TWICE (join
-    // probe + union) — cutLineage keeps the per-round logical plan
-    // constant-size (see its scaladoc)
-    var (labels, releaseLabels) = cutLineage(
+    // probe + union) — the lineage cut keeps the per-round logical plan
+    // constant-size
+    var labels = Lineage.cut(
       edges.select(col("src").as("node")).distinct()
         .select(col("node"), col("node").as("comp")))
     var prevSum = decimalSum(labels, "comp")
     var iter = 0
     var done = false
     while (!done && iter < maxIters) {
-      val (next, releaseNext) = cutLineage(
+      val next = Lineage.cut(
         edges.join(labels, edges("src") === labels("node"))
           .select(edges("dst").as("node"), labels("comp"))
           .union(labels)
           .groupBy(col("node")).agg(min(col("comp")).as("comp")))
       val s = decimalSum(next, "comp")
-      releaseLabels(false)
+      Lineage.release(labels)
       labels = next
-      releaseLabels = releaseNext
       done = s.compareTo(prevSum) == 0
       prevSum = s
       iter += 1
     }
-    edges.unpersist(blocking = false)
+    Lineage.release(edges)
     if (!done) {
-      releaseLabels(false)
+      Lineage.release(labels)
       throw new IllegalStateException(
         s"connectedComponents(minlabel) did not converge in $maxIters rounds " +
           "(graph diameter exceeds the round budget); raise maxIters or use " +
           "algorithm=\"star\" (O(log² n) rounds regardless of diameter)")
     }
-    graft.util.IntermediateCaches.trackRelease(releaseLabels)
     labels
   }
 
@@ -746,8 +688,8 @@ object Dedup {
     // large-star + small-star each reference the incoming edge frame
     // several times (adjacency explode + min join-back) — carried
     // lineage would multiply the logical plan ~4× per round, so each
-    // round goes through cutLineage (see its scaladoc)
-    var (edges, releaseEdges) = cutLineage(
+    // round goes through a lineage cut
+    var edges = Lineage.cut(
       canon(pairs.select(
         least(col(aCol), col(bCol)).as("u"),
         greatest(col(aCol), col(bCol)).as("v"))))
@@ -755,7 +697,7 @@ object Dedup {
     // star fixpoint drops no nodes, but the labels join below needs the
     // original node set anyway for the (center, center) self-rows);
     // materialized eagerly so it never re-runs the pair detector
-    val (nodes, releaseNodes) = cutLineage(
+    val nodes = Lineage.cut(
       edges.select(col("u").as("node"))
         .union(edges.select(col("v").as("node"))).distinct())
     nodes.count()
@@ -763,31 +705,29 @@ object Dedup {
     var iter = 0
     var done = false
     while (!done && iter < maxIters) {
-      val (next, releaseNext) = cutLineage(smallStar(largeStar(edges)))
+      val next = Lineage.cut(smallStar(largeStar(edges)))
       val s = checksum(next)
-      releaseEdges(false)
+      Lineage.release(edges)
       edges = next
-      releaseEdges = releaseNext
       done = s._1 == prev._1 && s._2.compareTo(prev._2) == 0 &&
         s._3.compareTo(prev._3) == 0
       prev = s
       iter += 1
     }
     if (!done) {
-      releaseEdges(false)
-      releaseNodes(false)
+      Lineage.release(edges)
+      Lineage.release(nodes)
       throw new IllegalStateException(
         s"connectedComponents(star) did not converge in $maxIters rounds; " +
           "raise maxIters")
     }
     // fixpoint edges are (center=u, leaf=v) stars; centers label themselves
-    val (labels, releaseLabels) = cutLineage(nodes
+    val labels = Lineage.cut(nodes
       .join(edges.select(col("v").as("node"), col("u").as("lbl")), Seq("node"), "left")
       .select(col("node"), coalesce(col("lbl"), col("node")).as("comp")))
     labels.count()
-    releaseEdges(false)
-    releaseNodes(false)
-    graft.util.IntermediateCaches.trackRelease(releaseLabels)
+    Lineage.release(edges)
+    Lineage.release(nodes)
     labels
   }
 
@@ -829,7 +769,7 @@ object Dedup {
     // severed: the 45-key self-join reads fps on both sides — without
     // the cut each band task binary carries the simhash expression
     // tree twice and the signatures compute twice (Lineage.sever)
-    val fps = graft.util.Lineage.severTracked(
+    val fps = Lineage.sever(
       spread(docs).select(col(idCol).as("doc"),
         org.apache.spark.sql.graft.PortableSimHash60
           .portable_simhash60(norm_text(col(textCol))).as("sh")))

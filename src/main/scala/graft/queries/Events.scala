@@ -54,11 +54,8 @@ object Events {
       within: java.time.Duration, userCol: String = "user_id",
       tsCol: String = "ts"): DataFrame = {
     require(stages.size >= 2, "a funnel needs at least two stages")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val win = expr(s"INTERVAL ${within.getSeconds} SECONDS")
-    def cached(df: DataFrame): DataFrame =
-      graft.util.IntermediateCaches.track(df.persist(lvl))
-    var stage = cached(events.filter(stages.head._2)
+    var stage = graft.util.Lineage.reuse(events.filter(stages.head._2)
       .groupBy(col(userCol))
       .agg(min(col(tsCol)).as("t_anchor"))
       .withColumn("t_stage", col("t_anchor")))
@@ -73,7 +70,7 @@ object Events {
         .groupBy(col(userCol), col("t_anchor"))
         .agg(min(col(tsCol)).as("t_stage"))
       // the LAST stage is referenced once (its count) — no persist
-      stage = if (i == stages.size - 2) next else cached(next)
+      stage = if (i == stages.size - 2) next else graft.util.Lineage.reuse(next)
       counts += stage.agg(count(lit(1)).as(s"n_$name"))
     }
     counts.result().reduce(_.crossJoin(_))

@@ -542,10 +542,9 @@ object Ann {
     // over it — twice unsalted (both self-join sides), four times salted
     // (both triangle sides + both vector re-joins). Persist it once;
     // tracked in IntermediateCaches for eager release by callers.
-    val withNorm = graft.util.IntermediateCaches.track(
+    val withNorm = graft.util.Lineage.reuse(
       assigned.select(col(idCol), col("cell"), col(vecCol),
-        l2norm(col(vecCol)).as("nrm"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        l2norm(col(vecCol)).as("nrm")))
     val sim = round(dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6)
     val pairs =
       if (salt <= 1) {
@@ -608,9 +607,8 @@ object Ann {
           .nearest_centroid(col(vecCol), cells, cents).as("cell"),
         l2norm(col(vecCol)).as("nrm"))
     // assignment (argmax + norm) feeds both self-join sides — one pass
-    val all = graft.util.IntermediateCaches.track(
-      withCell(history, "h").unionByName(withCell(batch, "b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val all = graft.util.Lineage.reuse(
+      withCell(history, "h").unionByName(withCell(batch, "b")))
     val a = all.filter(col("side") === "b").select(col("cell"),
       col(idCol).as("va"), col(vecCol).as("ea"), col("nrm").as("na"))
     val b = all.select(col("cell"), col(idCol).as("vb"),

@@ -93,7 +93,7 @@ object Bpe {
       wordCol: String = "word", freqCol: String = "freq",
       symsOf: Column => Column = charSyms): Seq[(String, String, Long)] = {
     require(k >= 1, s"k must be >= 1: $k")
-    var (vocab, release) = graft.util.Lineage.cut(
+    var vocab = graft.util.Lineage.cut(
       wordFreq.select(symsOf(col(wordCol)).as("syms"),
         col(freqCol).cast("long").as("freq")))
     // round r-1's release is deferred until round r's argmax has
@@ -101,7 +101,7 @@ object Bpe {
     // job — one Spark job per round, no extra count pass; releasing
     // r-1 earlier would force r's first evaluation to recompute the
     // whole chain from the source)
-    var prevRelease: Option[Boolean => Unit] = None
+    var prev: Option[DataFrame] = None
     val merges = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
     try {
       var round = 0
@@ -117,26 +117,22 @@ object Bpe {
           .agg(sum(col("freq")).as("pf"))
           .orderBy(desc("pf"), asc("l"), asc("r"))
           .limit(1).collect()
-        prevRelease.foreach(_(false))
-        prevRelease = Some(release)
+        prev.foreach(graft.util.Lineage.release(_))
+        prev = Some(vocab)
         if (best.isEmpty) dry = true
         else {
           val (l, r, pf) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
           merges += ((l, r, pf))
-          val (next, releaseNext) = graft.util.Lineage.cut(
+          vocab = graft.util.Lineage.cut(
             vocab.select(applyMerge(col("syms"), l, r).as("syms"), col("freq")))
-          vocab = next
-          release = releaseNext
           round += 1
         }
       }
       merges.toSeq
     } finally {
-      // on the dry-exit path prevRelease holds the SAME hook as
-      // release — invoke each hook at most once (the WordPiece
-      // learner's guard, applied to the identical pattern here)
-      prevRelease.foreach(_(false))
-      if (!prevRelease.exists(_ eq release)) release(false)
+      // on the dry-exit path prev IS vocab; release is idempotent
+      prev.foreach(graft.util.Lineage.release(_))
+      graft.util.Lineage.release(vocab)
     }
   }
 }

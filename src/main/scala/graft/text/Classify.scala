@@ -40,19 +40,16 @@ object Classify {
     // derive from this vocab×classes-sized frame rather than re-scanning
     // the token stream (persisted: three consumers in the model plan —
     // released by the harness via IntermediateCaches)
-    val cnt = graft.util.IntermediateCaches.track(
-      toks.groupBy(col("cls"), col("t")).agg(count(lit(1)).as("c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val cnt = graft.util.Lineage.reuse(
+      toks.groupBy(col("cls"), col("t")).agg(count(lit(1)).as("c")))
     // tot (classes rows) and vocab (1 row) each feed BOTH the seen and
     // unseen branches — cached so neither branch replays the aggregate
     // over the token counts (round-12 exchange diet; each replay was a
     // full extra shuffle pair in the executed plan)
-    val tot = graft.util.IntermediateCaches.track(
-      cnt.groupBy(col("cls")).agg(sum(col("c")).as("tc"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val vocab = graft.util.IntermediateCaches.track(
-      cnt.agg(countDistinct(col("t")).as("v"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val tot = graft.util.Lineage.reuse(
+      cnt.groupBy(col("cls")).agg(sum(col("c")).as("tc")))
+    val vocab = graft.util.Lineage.reuse(
+      cnt.agg(countDistinct(col("t")).as("v")))
     def llq(c: Column) = round(
       log((c + lit(1)).cast("double") / (col("tc") + col("v")).cast("double"))
         * Grid).cast("long")
@@ -68,22 +65,20 @@ object Classify {
     // frame is the t_token_budget trunk discipline: the round-10/11
     // plan audits attributed nb_classify's exchange bloat to exactly
     // this replayed subplan.
-    val priors = graft.util.IntermediateCaches.track(
+    val priors = graft.util.Lineage.reuse(
       train.groupBy(col(classCol).as("cls"))
         .agg(count(lit(1)).as("nc"))
         .crossJoin(broadcast(nDocs))
         .select(col("cls"),
           round(log(col("nc").cast("double") / col("n").cast("double")) * Grid)
-            .cast("long").as("priorq"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .cast("long").as("priorq")))
     // the MODEL is the cached trunk (vocab×classes rows — small):
     // nbScore filters it twice (seen/unseen split) and each branch
     // would otherwise replay the tot/vocab aggregates over the token
     // counts — the round-10 plan audit counted those duplicated
     // exchanges as nb_classify's main plan bloat
-    val model = graft.util.IntermediateCaches.track(
-      seen.unionByName(unseen)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val model = graft.util.Lineage.reuse(
+      seen.unionByName(unseen))
     (model, priors)
   }
 
@@ -177,20 +172,20 @@ object Classify {
       .orderBy(desc("f"), asc("t")).limit(nFeatures - 1)
       .collect().map(_.getString(0))
       .zipWithIndex.map { case (t, i) => (i + 1, t) }.toSeq
-    // the matrix is doc-PARTITIONED before the sever: localCheckpoint
+    // the matrix is doc-PARTITIONED before the sever: a checkpoint
     // preserves outputPartitioning, so every epoch's doc-keyed window
     // reads the checkpoint blocks in place — ZERO per-epoch exchanges
     // for the margin pass (only the nWeights-row delta aggregate
     // shuffles). Measured at sf0.1: the 8-epoch hashed training
     // dropped ~2x once the per-epoch window shuffle disappeared.
-    val (x, releaseX) = graft.util.Lineage.sever(designMatrix(
+    val x = graft.util.Lineage.sever(designMatrix(
       train.select(col(idCol).as("doc"), labelCol.cast("int").as("y"),
         col(textCol).as("txt")), feats)
       .repartition(col("doc")))
     // sized to the REALIZED feature count (a small corpus can have
     // fewer distinct tokens than requested features) + the bias slot
     try LinearModel(feats, epochLoop(x, feats.length + 1, epochs))
-    finally releaseX(false)
+    finally graft.util.Lineage.release(x)
   }
 
   /** The shared per-epoch gradient pass over a severed (doc, y, fidx,
@@ -238,12 +233,12 @@ object Classify {
       buckets: Int, epochs: Int,
       idCol: String = "doc_id", textCol: String = "text"): Seq[Array[Long]] = {
     require(buckets >= 2 && epochs >= 1, s"bad dims: $buckets/$epochs")
-    val (x, releaseX) = graft.util.Lineage.sever(designMatrixHashed(
+    val x = graft.util.Lineage.sever(designMatrixHashed(
       train.select(col(idCol).as("doc"), labelCol.cast("int").as("y"),
         col(textCol).as("txt")), buckets)
       .repartition(col("doc"))) // see perceptronTrain: epoch windows shuffle-free
     try epochLoop(x, buckets + 1, epochs)
-    finally releaseX(false)
+    finally graft.util.Lineage.release(x)
   }
 
   /** Score docs under final hashed weights — the map-only applied

@@ -48,12 +48,12 @@ object WordPiece {
       wordCol: String = "word",
       freqCol: String = "freq"): Seq[(String, String, Long, Long)] = {
     require(k >= 1, s"k must be >= 1: $k")
-    var (vocab, release) = graft.util.Lineage.cut(
+    var vocab = graft.util.Lineage.cut(
       wordFreq.select(Bpe.charSyms(col(wordCol)).as("syms"),
         col(freqCol).cast("long").as("freq")))
     // round r-1 releases only after round r's argmax materialized
     // round r's cut RDD (the Bpe.learnMerges discipline)
-    var prevRelease: Option[Boolean => Unit] = None
+    var prev: Option[DataFrame] = None
     val merges = scala.collection.mutable.ArrayBuffer[(String, String, Long, Long)]()
     try {
       var round = 0
@@ -82,26 +82,22 @@ object WordPiece {
               .as("score"))
           .orderBy(desc("score"), asc("l"), asc("r"))
           .limit(1).collect()
-        prevRelease.foreach(_(false))
-        prevRelease = Some(release)
+        prev.foreach(graft.util.Lineage.release(_))
+        prev = Some(vocab)
         if (best.isEmpty) dry = true
         else {
           val (l, r) = (best(0).getString(0), best(0).getString(1))
           merges += ((l, r, best(0).getLong(2), best(0).getLong(3)))
-          val (next, releaseNext) = graft.util.Lineage.cut(
+          vocab = graft.util.Lineage.cut(
             vocab.select(Bpe.applyMerge(col("syms"), l, r).as("syms"), col("freq")))
-          vocab = next
-          release = releaseNext
           round += 1
         }
       }
       merges.toSeq
     } finally {
-      // on the dry-exit path prevRelease holds the SAME hook as
-      // release — invoke each hook at most once rather than relying
-      // on unpersist idempotency
-      prevRelease.foreach(_(false))
-      if (!prevRelease.exists(_ eq release)) release(false)
+      // on the dry-exit path prev IS vocab; release is idempotent
+      prev.foreach(graft.util.Lineage.release(_))
+      graft.util.Lineage.release(vocab)
     }
   }
 }

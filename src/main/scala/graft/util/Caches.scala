@@ -18,36 +18,35 @@ import org.apache.spark.sql.DataFrame
   * [[releaseAll]] is the precise middle ground: eagerly release
   * exactly the operator-internal entries, nothing else. Call it AFTER
   * materializing the operator's result (count/collect/write).
-  * Persist-backed entries stay valid afterwards (they re-execute from
-  * lineage if reused) — but entries registered by
-  * [[Lineage.severTracked]] are DESTRUCTIVE: a severed
-  * (locally-checkpointed) frame has no lineage to recompute from, so
-  * reusing it after releaseAll fails with checkpoint-block-not-found.
-  * The contract is therefore: between releaseAll and the next query,
-  * no frame returned by an operator may be re-executed. Thread-safe;
-  * calling releaseAll twice is harmless (the queue drains).
+  * Persisted and cut entries stay valid afterwards (they re-execute
+  * from lineage if reused) — but locally severed entries
+  * ([[Lineage.sever]]) are DESTRUCTIVE: a locally-checkpointed frame
+  * has no lineage to recompute from, so reusing it after releaseAll
+  * fails with checkpoint-block-not-found. The contract is therefore:
+  * between releaseAll and the next query, no frame returned by an
+  * operator may be re-executed. Entries are registered only through
+  * [[Lineage]]. Thread-safe; every release runs at most once.
   */
 object IntermediateCaches {
-  private val tracked = new ConcurrentLinkedQueue[Boolean => Unit]()
+  private final class Entry(val df: DataFrame, val release: Boolean => Unit)
+  private val tracked = new ConcurrentLinkedQueue[Entry]()
 
-  /** Register an operator-internal persisted frame for later release. */
-  private[graft] def track(df: DataFrame): DataFrame = {
-    tracked.add(blocking => { df.unpersist(blocking); () })
+  /** Register the release of a materialized `df`; returns `df`. */
+  private[util] def track(df: DataFrame, release: Boolean => Unit): DataFrame = {
+    tracked.add(new Entry(df, release))
     df
   }
 
-  /** Register an arbitrary release action (e.g. an RDD-level persist
-    * backing a lineage-cut frame, which `Dataset.unpersist` and
-    * `catalog.clearCache` cannot reach). */
-  private[graft] def trackRelease(release: Boolean => Unit): Unit =
-    tracked.add(release)
+  /** Release the entries registered for `df` (identity) now. */
+  private[util] def release(df: DataFrame, blocking: Boolean): Unit =
+    tracked.forEach(e => if ((e.df eq df) && tracked.remove(e)) e.release(blocking))
 
   /** Eagerly release every tracked operator-internal cache. */
   def releaseAll(blocking: Boolean = false): Unit = {
-    var r = tracked.poll()
-    while (r != null) {
-      r(blocking)
-      r = tracked.poll()
+    var e = tracked.poll()
+    while (e != null) {
+      e.release(blocking)
+      e = tracked.poll()
     }
   }
 

@@ -2,9 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.dedup.Dedup
-import graft.util.Skew
+import graft.util.{IntermediateCaches, Lineage, Skew}
+import graft.util.Lineage.Mode
 
 /** Scale-path plumbing: skew-salted self-join equivalence and runtime
   * bloom-filter pruning of a selective fact join. */
@@ -23,7 +25,7 @@ class ScaleSpec extends AnyFunSuite {
     // other suites share this session and may hold their own tracked
     // caches; assert release only over the RDDs THIS test creates
     val preexisting = spark.sparkContext.getPersistentRDDs.keySet
-    val (cut, release) = graft.util.Lineage.cut(base)
+    val cut = Lineage.cut(base)
     try {
       assert(cut.schema == base.schema)
       assert(cut.collect().toSeq.sortBy(_.getLong(0)) ==
@@ -33,76 +35,103 @@ class ScaleSpec extends AnyFunSuite {
       assert(logical.children.isEmpty, s"cut plan is not a leaf:\n$logical")
       // 30 stacked rounds stay flat: each cut's plan is again a leaf
       var f = cut
-      var releases = List(release)
+      var frames = List(cut)
       for (_ <- 1 to 30) {
-        val (nf, r) = graft.util.Lineage.cut(f.select(col("id"), (col("v") + 1).as("v")))
-        f = nf; releases ::= r
+        f = Lineage.cut(f.select(col("id"), (col("v") + 1).as("v")))
+        frames ::= f
       }
       assert(f.queryExecution.logical.children.isEmpty)
       assert(f.agg(sum(col("v"))).collect().head.getLong(0) ==
         base.agg(sum(col("v") + 30)).collect().head.getLong(0))
-      releases.foreach(_(true))
+      frames.foreach(Lineage.release(_, blocking = true))
       // released but still usable
       assert(f.count() == base.count())
       val leftover = spark.sparkContext.getPersistentRDDs.keySet -- preexisting
       assert(leftover.isEmpty, s"cut RDDs survive release: $leftover")
-    } finally release(true)
+    } finally Lineage.release(cut, blocking = true)
   }
 
   test("Lineage.sever: local and reliable modes agree; reliable survives release") {
-    import graft.util.Lineage
     val base = (1L to 100L).toDF("id")
       .select(col("id"), (col("id") * 7 % 13).as("v"))
       .filter(col("id") % 4 =!= 0)
     val expect = base.collect().toSeq.sortBy(_.getLong(0))
 
-    // local (default) mode: leaf plan, identical rows
-    val (loc, releaseLoc) = Lineage.sever(base)
+    // local mode (this suite's local master): leaf plan, identical rows
+    val loc = Lineage.sever(base)
     assert(loc.queryExecution.logical.children.isEmpty)
     assert(loc.collect().toSeq.sortBy(_.getLong(0)) == expect)
-    releaseLoc(true)
+    Lineage.release(loc, blocking = true)
 
-    spark.conf.set(Lineage.ReliableKey, "true")
-    try {
-      // the flag without a checkpoint dir must fail FAST at sever time
-      if (spark.sparkContext.getCheckpointDir.isEmpty) {
-        intercept[IllegalArgumentException] { Lineage.sever(base) }
-      }
-      val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
-      spark.sparkContext.setCheckpointDir(dir.toString)
-      val (rel, releaseRel) = Lineage.sever(base)
-      assert(rel.queryExecution.logical.children.isEmpty)
-      assert(rel.collect().toSeq.sortBy(_.getLong(0)) == expect)
-      // the fault-tolerance contract: blocks live in DURABLE storage —
-      // files exist under the checkpoint dir, and the frame stays
-      // usable after its release hook runs (recompute reads the files;
-      // the local mode's release is destructive by contrast)
-      def files(p: java.nio.file.Path): Long = {
-        val s = java.nio.file.Files.walk(p)
-        try s.filter(java.nio.file.Files.isRegularFile(_)).count()
-        finally s.close()
-      }
-      assert(files(dir) > 0, "reliable sever wrote no checkpoint files")
-      releaseRel(true)
-      assert(rel.collect().toSeq.sortBy(_.getLong(0)) == expect,
-        "reliable-severed frame must survive its release hook")
-    } finally spark.conf.unset(Lineage.ReliableKey)
+    // the reliable mode (what a non-local master with a checkpoint dir
+    // decides), forced here: without a checkpoint dir it must fail FAST
+    // at sever time
+    if (spark.sparkContext.getCheckpointDir.isEmpty) {
+      intercept[IllegalArgumentException] { Lineage.sever(base, Mode.Reliable) }
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    // a checkpoint dir alone does not switch a local master to reliable
+    assert(Lineage.gate(base.limit(0)) == Mode.Lazy)
+    val rel = Lineage.sever(base, Mode.Reliable)
+    assert(rel.queryExecution.logical.children.isEmpty)
+    assert(rel.collect().toSeq.sortBy(_.getLong(0)) == expect)
+    // the fault-tolerance contract: blocks live in DURABLE storage —
+    // files exist under the checkpoint dir, and the frame stays
+    // usable after its release (recompute reads the files; the local
+    // mode's release is destructive by contrast)
+    def files(p: java.nio.file.Path): Long = {
+      val s = java.nio.file.Files.walk(p)
+      try s.filter(java.nio.file.Files.isRegularFile(_)).count()
+      finally s.close()
+    }
+    assert(files(dir) > 0, "reliable sever wrote no checkpoint files")
+    Lineage.release(rel, blocking = true)
+    assert(rel.collect().toSeq.sortBy(_.getLong(0)) == expect,
+      "reliable-severed frame must survive its release")
+  }
 
-    // malformed flag values fail at sever time with a message naming
-    // the key (round-18 advice: a bare String.toBoolean throw from a
-    // deep call site is undiagnosable); case/whitespace variants parse
-    spark.conf.set(Lineage.ReliableKey, "1")
-    try {
-      val e = intercept[IllegalArgumentException] { Lineage.sever(base) }
-      assert(e.getMessage.contains(Lineage.ReliableKey) &&
-        e.getMessage.contains("'1'"))
-    } finally spark.conf.unset(Lineage.ReliableKey)
-    spark.conf.set(Lineage.ReliableKey, " False ")
-    try {
-      val (df, rel) = Lineage.sever(base) // parses as false: local path
-      assert(df.collect().toSeq.sortBy(_.getLong(0)) == expect)
-      rel(true)
-    } finally spark.conf.unset(Lineage.ReliableKey)
+  test("Lineage policy: (local master, checkpoint dir, input estimate) -> mode") {
+    val below = Some(BigInt(Lineage.SeverBytes - 1))
+    val above = Some(BigInt(Lineage.SeverBytes))
+    // (local master?, checkpoint dir set?, gated estimate) -> mode;
+    // None is an ungated sever
+    val table = Seq(
+      (true, false, below) -> Mode.Lazy,
+      (true, true, below) -> Mode.Lazy,
+      (false, false, below) -> Mode.Lazy,
+      (false, true, below) -> Mode.Lazy,
+      (true, false, above) -> Mode.Local,
+      (true, true, above) -> Mode.Local,
+      (false, false, above) -> Mode.Local,
+      (false, true, above) -> Mode.Reliable,
+      (true, false, None) -> Mode.Local,
+      (true, true, None) -> Mode.Local,
+      (false, false, None) -> Mode.Local,
+      (false, true, None) -> Mode.Reliable)
+    for (((local, ckpt, est), want) <- table)
+      assert(Lineage.decide(local, ckpt, est) == want,
+        s"local=$local checkpointDir=$ckpt estimate=$est")
+    // the session reading: a tiny input on this local master stays lazy
+    assert(Lineage.gate((1L to 10L).toDF("id")) == Mode.Lazy)
+  }
+
+  test("Lineage.release frees one frame early, exactly once") {
+    val base = (1L to 50L).toDF("id").select(col("id"), (col("id") % 7).as("v"))
+    val before = IntermediateCaches.trackedCount
+    val r = Lineage.reuse(base)
+    r.count()
+    assert(r.storageLevel != StorageLevel.NONE)
+    assert(IntermediateCaches.trackedCount == before + 1)
+    Lineage.release(r, blocking = true)
+    assert(r.storageLevel == StorageLevel.NONE)
+    assert(IntermediateCaches.trackedCount == before)
+    // idempotent: a second release (or releaseAll later) is a no-op
+    Lineage.release(r, blocking = true)
+    assert(IntermediateCaches.trackedCount == before)
+    // a lazy sever is the input itself and registers nothing
+    assert(Lineage.sever(base, Mode.Lazy) eq base)
+    assert(IntermediateCaches.trackedCount == before)
   }
 
   test("saltedSelfJoinPairs == plain self-join pairs, every salt") {
@@ -210,10 +239,10 @@ class ScaleSpec extends AnyFunSuite {
     Dedup.minhashLshPairs(docs, n = 3, threshold = 0.5).count()
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
       "minhashLshPairs should have registered a persisted candidate set")
-    graft.util.IntermediateCaches.releaseAll(blocking = true)
+    IntermediateCaches.releaseAll(blocking = true)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       "releaseAll must leave no operator-internal cache behind")
-    assert(graft.util.IntermediateCaches.trackedCount == 0)
+    assert(IntermediateCaches.trackedCount == 0)
   }
 
   test("cosineLshPairs on an empty corpus returns an empty frame with the right schema") {
